@@ -136,14 +136,6 @@ object Bench {
       // wide MinHash signature aggregate: keep whole-stage codegen on
       // past the default 100-field limit (graft.ops.llm.Dedup).
       .config("spark.sql.codegen.maxFields", "220")
-      // the session-lived memoized pins (suffix index, span/winnow
-      // frames) stay resident for ~150 queries of the sweep; the
-      // protected-storage floor decides whether they squeeze execution
-      // memory (default 0.5) or spill to disk under pressure
-      // (MEMORY_AND_DISK localCheckpoint blocks are eviction-safe).
-      // Exposed for A/B: SPARK_GRAFT_STORAGE_FRACTION.
-      .config("spark.memory.storageFraction",
-        sys.env.getOrElse("SPARK_GRAFT_STORAGE_FRACTION", "0.5"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warmup: run the flagship once so the first timed query doesn't absorb
@@ -228,9 +220,8 @@ object Bench {
     val contendReason = triggers.mkString("; ")
     // the COMPACT twin line (stdout, 1800-char budget) carries a slim
     // env — the r12 trigger/rule/steal-avg/mem fields would displace
-    // ~5 more query entries from the driver's scrape window, shrinking
-    // the comparable set a tail-scrape regressGuard can recover
-    // (self-review r12 pass 4); BENCH.json keeps the full env
+    // query entries from the 1800-char stdout window (self-review r12
+    // pass 4); BENCH.json keeps the full env
     val envSlim =
       s""""env":{"load_start":$load0,"load_end":$load1,""" +
       s""""contended":$contended,"steal_cpu_s":$stealCpuS,"reps":$reps},""" +
@@ -263,8 +254,8 @@ object Bench {
     if (only.isEmpty) {
       try Files.writeString(Paths.get("BENCH.json"), line + "\n")
       catch { case _: Throwable => () }
-      // automatic per-query regression guard vs the latest committed
-      // BENCH_r{N}.json (VERDICT r9 #8: run it in the round flow, not by
+      // automatic per-query regression guard vs the pinned baseline
+      // snapshot (VERDICT r9 #8: run it in the round flow, not by
       // hand) — writes BENCH_REGRESS.md and prints one loud line
       try regressGuard(results.toMap, contended, contendReason)
       catch { case e: Throwable =>
@@ -285,300 +276,85 @@ object Bench {
     spark.stop()
   }
 
-  /** A chosen regression baseline: `cleanCertified` = the snapshot is
-    * certified non-contended (explicit `contended: false`, or loads
-    * below the cuts when the flag predates r11); false means every
-    * candidate was contended and the newest was used under protest.
+  /** The committed snapshot [[regressGuard]] diffs against: the
+    * certified-clean full sweep that also set [[BaselineSeconds]], so one
+    * constant ([[BaselineRound]]) governs both the ≤2× denominator and
+    * the per-query regression baseline. A plain name→time object.
     */
-  private[graft] final case class BaselinePick(
-      round: Int, path: java.nio.file.Path, cleanCertified: Boolean)
+  private[graft] val BaselineFile = s"BENCH_clean_r$BaselineRound.json"
 
-  /** Was this committed snapshot's run contended? Reads the explicit
-    * `contended` flag (r11+), else derives it from the recorded loads
-    * under the current rule (pre-r11 snapshots), checking parsed.env /
-    * top-level env / the raw stdout tail. None = no run-condition data
-    * at all (r01–r04 scrape failures) — not certifiable as clean.
-    */
-  private[graft] def snapshotContended(json: String): Option[Boolean] = {
-    val node =
-      try new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
-      catch { case _: Throwable => return None }
-    if (node == null) return None
-    val envNode = {
-      val parsed = node.get("parsed")
-      val fromParsed =
-        if (parsed != null && parsed.isObject) parsed.get("env") else null
-      if (fromParsed != null && fromParsed.isObject) fromParsed
-      else node.get("env")
-    }
-    def fromLoads(ls: Double, le: Double) =
-      ls >= LoadStartCut || le >= LoadEndCut
-    if (envNode != null && envNode.isObject) {
-      val c = envNode.get("contended")
-      if (c != null && c.isBoolean) Some(c.asBoolean())
-      else (Option(envNode.get("load_start")).map(_.asDouble(-1)),
-            Option(envNode.get("load_end")).map(_.asDouble(-1))) match {
-        case (Some(a), Some(b)) if a >= 0 && b >= 0 => Some(fromLoads(a, b))
-        case _ => None
-      }
-    } else {
-      val tail = Option(node.get("tail")).map(_.asText("")).getOrElse("")
-      raw""""contended":(true|false)""".r.findFirstMatchIn(tail) match {
-        case Some(m) => Some(m.group(1).toBoolean)
-        case None =>
-          // trailing delimiter lookahead, same contract as the query
-          // scraper above (ADVICE r10): the tail's END boundary can cut
-          // a number mid-token ("load_end":4.74 → "load_end":4), and a
-          // truncated load read below the cut would mis-certify a
-          // contended snapshot as the clean baseline
-          val num = (key: String) =>
-            (raw""""$key":(-?\d+(?:\.\d+)?)(?=[,}])""").r
-              .findFirstMatchIn(tail).map(_.group(1).toDouble)
-          (num("load_start"), num("load_end")) match {
-            case (Some(a), Some(b)) => Some(fromLoads(a, b))
-            case _ => None
-          }
-      }
-    }
-  }
-
-  /** Newest CLEAN baseline snapshot in `dir` (VERDICT r11 #1: the guard
-    * previously diffed against the newest `BENCH_r{N}.json`
-    * unconditionally — and r11's is self-flagged contended, ~20%
-    * inflated, so r12 would have seen phantom improvements and masked
-    * regressions up to ~1.8×). Candidates are `BENCH_r{N}.json` (driver
-    * snapshots) and `BENCH_clean_r{N}.json` (clean-host runs adopted by
-    * commit when the driver's own run was contended); within a round the
-    * clean artifact wins, across rounds newest-certified-clean wins.
-    * Falls back to the newest candidate (flagged `cleanCertified=false`)
-    * only when NO candidate certifies clean.
-    */
-  private[graft] def pickBaseline(dir: java.nio.file.Path): Option[BaselinePick] = {
-    val pat = raw"BENCH_(clean_)?r(\d+)\.json".r
+  /** Per-query times out of a committed snapshot's `queries` object. */
+  private[graft] def snapshotQueries(json: String): Map[String, Double] = {
     import scala.jdk.CollectionConverters._
-    var cands = List.empty[(Int, Boolean, java.nio.file.Path)]
-    // close the directory stream (ADVICE r10: Files.list leaks the fd
-    // when only its iterator is consumed)
-    val listing = java.nio.file.Files.list(dir)
-    try listing.iterator().asScala.foreach { p =>
-      p.getFileName.toString match {
-        case pat(cleanTag, n) => cands ::= ((n.toInt, cleanTag != null, p))
-        case _ => ()
-      }
-    } finally listing.close()
-    val ordered = cands.sortBy { case (r, cleanFile, _) => (-r, !cleanFile) }
-    def certify(p: java.nio.file.Path): Option[Boolean] =
-      snapshotContended(
-        try Files.readString(p) catch { case _: Throwable => "" })
-    val certified = ordered.map { case (r, _, p) => (r, p, certify(p)) }
-    certified.collectFirst {
-      case (r, p, Some(false)) => BaselinePick(r, p, cleanCertified = true)
-    }.orElse(
-      // all-contended fallback: prefer the newest snapshot that at least
-      // PARSED (a corrupt/truncated newest file would make regressGuard's
-      // own read throw and skip the report entirely, when an older
-      // readable candidate could still produce the under-protest diff)
-      certified.collectFirst {
-        case (r, p, Some(_)) => BaselinePick(r, p, cleanCertified = false)
-      }
-    ).orElse(certified.headOption.map { case (r, p, _) =>
-      BaselinePick(r, p, cleanCertified = false)
-    })
+    val qs = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(json).get("queries")
+    require(qs != null && qs.isObject,
+      "baseline snapshot carries no name->time \"queries\" object")
+    qs.fieldNames().asScala.map(k => k -> qs.get(k).asDouble()).toMap
   }
 
-  /** Per-query times out of a committed snapshot, in all four shapes
-    * the artifacts take (factored from [[regressGuard]] so the decode
-    * is unit-testable):
-    *  - the driver's BENCH_r{N}.json wraps the bench line under
-    *    "parsed"; BENCH.json / BENCH_clean_r{N}.json carry it directly;
-    *  - "queries" as the full name→time OBJECT (committed artifacts,
-    *    small scraped runs);
-    *  - "queries" as the POSITIONAL array (the r13 compact twin —
-    *    values by sorted query name): decoded by zipping a name list
-    *    that the snapshot's `qsig` VALIDATES ([[namesSig]]) — tried
-    *    against `currentNames` first, then against the name list of
-    *    every committed `CORRECTNESS_r{N}.json` in `dir` (the file
-    *    that records each round's exact query set). The query set
-    *    changes between rounds, and zipping a mismatched list would
-    *    silently mislabel every entry (undecodable-but-honest beats
-    *    wrong) — when no list validates, the snapshot's `top` object
-    *    (the slowest few, always name-keyed) is the comparable set;
-    *  - scrape-failed snapshots: recover name:time pairs from the raw
-    *    "tail" fragment by delimiter-anchored regex.
-    *
-    * Returns the decoded map plus an optional DEGRADED-DECODE note: a
-    * positional vector that fell back to the `top` object silently
-    * shrinks the comparable set from ~251 to ≤24, and a
-    * BENCH_REGRESS.md reading "24 comparable, 0 regressed" must say
-    * WHY it is small or a regression in the other ~227 hides behind a
-    * clean-looking report (self-review r13 pass 3 — the no-silent-caps
-    * rule).
-    */
-  private[graft] def snapshotQueries(json: String, currentNames: Seq[String],
-                                     dir: java.nio.file.Path = Paths.get("."))
-      : (Map[String, Double], Option[String]) = {
-    import scala.jdk.CollectionConverters._
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = mapper.readTree(json)
-    val parsed = node.get("parsed")
-    val holder =
-      if (parsed != null && parsed.isObject) parsed else node
-    val qs = holder.get("queries")
-    if (qs != null && qs.isObject)
-      (qs.fieldNames().asScala.map(k => k -> qs.get(k).asDouble()).toMap, None)
-    else if (qs != null && qs.isArray) {
-      val sig = Option(holder.get("qsig")).map(_.asText("")).getOrElse("")
-      def tryNames(names: Seq[String]): Option[Map[String, Double]] =
-        if (qs.size == names.size && sig == namesSig(names))
-          Some(names.zipWithIndex
-            .map { case (n, i) => n -> qs.get(i).asDouble() }.toMap)
-        else None
-      def fromCorrectness: Option[Map[String, Double]] = {
-        val listing =
-          try java.nio.file.Files.list(dir)
-          catch { case _: Throwable => return None }
-        val pat = raw"CORRECTNESS_r(\d+)\.json".r
-        val files =
-          try listing.iterator().asScala.flatMap { p =>
-            p.getFileName.toString match {
-              case pat(n) => Some((n.toInt, p))
-              case _      => None
-            }
-          }.toList
-          finally listing.close()
-        // newest ROUND first — by the extracted number, not the file
-        // name (lexicographic puts r9 before r13; the sig keeps any
-        // order correct, but the newest round is the likely match)
-        files.sortBy(-_._1).view.flatMap { case (_, p) =>
-          try tryNames(mapper.readTree(Files.readString(p))
-            .fieldNames().asScala.toSeq.sorted)
-          catch { case _: Throwable => None }
-        }.headOption
-      }
-      def fromTop: (Map[String, Double], Option[String]) = {
-        val top = holder.get("top")
-        val m =
-          if (top != null && top.isObject)
-            top.fieldNames().asScala.map(k => k -> top.get(k).asDouble()).toMap
-          else Map.empty[String, Double]
-        (m, Some(s"baseline positional vector (${qs.size} entries, " +
-          s"qsig $sig) UNDECODABLE — query set drifted and no committed " +
-          s"CORRECTNESS_r{N}.json name list matched; compared only the " +
-          s"${m.size} slowest named entries"))
-      }
-      tryNames(currentNames).orElse(fromCorrectness).map((_, None))
-        .getOrElse(fromTop)
-    } else {
-      val tail = Option(node.get("tail")).map(_.asText("")).getOrElse("")
-      // the tail is the LAST 2000 chars of the driver's stdout scrape:
-      // its start boundary can cut a pair mid-token, so require each
-      // match to sit between JSON delimiters — a leading `{`/`,` proves
-      // the key wasn't truncated, a trailing `,`/`}` proves the number
-      // wasn't (ADVICE r10: a boundary fragment yielded a wrong old
-      // time and a spurious >=1.5x verdict)
-      val recovered = raw"""[,{]"([A-Za-z0-9_]+)":(-?\d+\.\d+)(?=[,}])""".r
-        .findAllMatchIn(tail)
-        .map(m => m.group(1) -> m.group(2).toDouble)
-        .filterNot(m => Set("value", "load_start", "load_end",
-          "baseline_s", "suffix_index_cold_s", "span_frame_cold_s",
-          "steal_cpu_s", "steal_cores_avg", "sf")
-          .contains(m._1)).toMap
-      // This path recovers ONLY the pairs that survived the last-2000-char
-      // scrape window — a silently shrunken comparable set is the exact
-      // disclosure gap the decodeNote machinery closes for the positional
-      // fallback (advisor r13): say so, so BENCH_REGRESS.md's banner fires.
-      (recovered, Some(s"scrape-failed baseline: ${recovered.size} pairs " +
-        "recovered from a truncated 2000-char tail fragment; regressions " +
-        "in queries outside them are UNCHECKED"))
-    }
-  }
-
-  /** Compare this run's medians against the newest committed CLEAN
-    * baseline snapshot (factor-1.5 alarm, mirroring
-    * `tools/bench_regress.py`), write the `BENCH_REGRESS.md` artifact,
-    * and print a one-line verdict. Broken = ran before, failed now;
-    * regressed = ≥1.5× slower on the comparable set.
+  /** Compare this run's medians against [[BaselineFile]] (factor-1.5
+    * alarm, mirroring `tools/bench_regress.py`), write the
+    * `BENCH_REGRESS.md` artifact, and print a one-line verdict. Broken =
+    * ran before, failed now; regressed = ≥1.5× slower on the comparable
+    * set.
     */
   private def regressGuard(current: Map[String, Double], contended: Boolean,
                            contendReason: String): Unit = {
-    pickBaseline(Paths.get(".")).foreach { case BaselinePick(round, path, cleanBase) =>
-      val (old, decodeNote) =
-        snapshotQueries(Files.readString(path), current.keySet.toSeq.sorted)
-      val shared = old.keySet.intersect(current.keySet)
-        .filter(k => old(k) > 0 && current(k) >= 0)
-      val broken = old.keySet.intersect(current.keySet)
-        .filter(k => old(k) > 0 && current(k) < 0).toSeq.sorted
-      // minimum-time floor for VERDICTS (mirrors tools/bench_regress.py
-      // --min-sec): sub-0.5s times are noise at this harness's
-      // resolution, and a scraped positional baseline is additionally
-      // 2-decimal QUANTIZED — old 0.073s encodes as 0.07, so a true
-      // 1.41x move on a fast query would read 1.51x from rounding alone
-      // (self-review r13 pass 2); at 0.5s the quantization error is ≤1%
-      val floored = shared.filter(k => math.max(old(k), current(k)) >= 0.5)
-      val regressed = floored.filter(k => current(k) / old(k) >= 1.5)
-        .toSeq.sortBy(k => -current(k) / old(k))
-      val improved = floored.filter(k => old(k) / current(k) >= 1.5)
-        .toSeq.sortBy(k => -old(k) / current(k))
-      def row(k: String) = f"| $k | ${old(k)}%.2f | ${current(k)}%.2f | ${current(k) / old(k)}%.2fx |"
-      val md = new StringBuilder
-      val suspect = if (contended) " — CONTENDED HOST" else ""
-      // name the baseline ROUND AND FILE (VERDICT r11 #1): a reader must
-      // see which snapshot the ratios divide by, and whether it was
-      // certified clean or a contended last resort
-      val baseName = path.getFileName.toString
-      val baseKind =
-        if (cleanBase) "certified clean"
-        else "CONTENDED — no clean candidate existed; ratios inflated"
-      md ++= s"# BENCH_REGRESS — this run vs $baseName (round $round baseline, $baseKind; factor 1.5)$suspect\n\n"
-      decodeNote.foreach(n => md ++= s"**DEGRADED BASELINE DECODE**: $n — " +
-        "a small comparable set below is a DECODE limitation, not a " +
-        "small run; regressions outside it are unchecked.\n\n")
-      if (!cleanBase)
-        md ++= "**CONTENDED BASELINE**: no committed snapshot certified " +
-          "clean (each was flagged/derived contended, or carried no " +
-          "run-condition data to certify), so the newest usable one was " +
-          "taken under protest — 'improved' rows below may be phantom " +
-          "(the baseline was slow, not the code fast) and real " +
-          "regressions may hide.\n\n"
-      if (contended)
-        // name the ACTUAL trigger: a load_end-triggered flag previously
-        // printed the load_start explanation, sending a reader to debunk
-        // the wrong condition
-        md ++= f"**CONTENDED RUN ($contendReason)**: times are " +
-          "not comparable to a clean-host snapshot; any 'regressed' rows below " +
-          "are SUSPECT-HOST, not code verdicts (VERDICT r10 #6 — a load-1.74 " +
-          "driver run flagged two phantom regressions the clean run contradicted).\n\n"
-      // disclose the verdict floor (self-review r13 pass 4 — the same
-      // silent-cap class as the decode note): "251 comparable, 0
-      // regressed" must not read as "all 251 checked at 1.5x" when
-      // most sat under the 0.5s floor
-      val belowFloor = shared.size - floored.size
-      md ++= s"Comparable queries: ${shared.size} "
-      md ++= s"($belowFloor below the 0.5s verdict floor — " +
-        s"ratio verdicts cover the ${floored.size} at/above it); "
-      md ++= s"broken: ${broken.size}; "
-      md ++= s"regressed >=1.5x: ${regressed.size}; improved >=1.5x: ${improved.size}.\n\n"
-      if (broken.nonEmpty)
-        md ++= broken.mkString("Broken (ran before, failed now): ", ", ", "\n\n")
-      if (regressed.nonEmpty) {
-        val head = if (contended) "regressed (suspect-host)" else "regressed"
-        md ++= s"| $head | old s | new s | factor |\n|---|---|---|---|\n"
-        regressed.foreach(k => md ++= row(k) + "\n")
-        md ++= "\n"
-      }
-      if (improved.nonEmpty) {
-        md ++= "| improved | old s | new s | factor |\n|---|---|---|---|\n"
-        improved.foreach(k => md ++= row(k) + "\n")
-      }
-      Files.writeString(Paths.get("BENCH_REGRESS.md"), md.toString)
-      val flag = if (contended) " [CONTENDED: regressions suspect-host]" else ""
-      val baseFlag = if (cleanBase) "" else " [CONTENDED BASELINE]"
-      val decodeFlag = if (decodeNote.isDefined) " [DEGRADED DECODE]" else ""
-      println(s"[bench-regress] vs $baseName (r$round$baseFlag)$decodeFlag: " +
-        s"${shared.size} comparable, " +
-        s"${broken.size} broken, ${regressed.size} regressed >=1.5x, " +
-        s"${improved.size} improved >=1.5x -> BENCH_REGRESS.md$flag")
+    val old = snapshotQueries(Files.readString(Paths.get(BaselineFile)))
+    val shared = old.keySet.intersect(current.keySet)
+      .filter(k => old(k) > 0 && current(k) >= 0)
+    val broken = old.keySet.intersect(current.keySet)
+      .filter(k => old(k) > 0 && current(k) < 0).toSeq.sorted
+    // minimum-time floor for VERDICTS (mirrors tools/bench_regress.py
+    // --min-sec): sub-0.5s times are noise at this harness's
+    // resolution
+    val floored = shared.filter(k => math.max(old(k), current(k)) >= 0.5)
+    val regressed = floored.filter(k => current(k) / old(k) >= 1.5)
+      .toSeq.sortBy(k => -current(k) / old(k))
+    val improved = floored.filter(k => old(k) / current(k) >= 1.5)
+      .toSeq.sortBy(k => -old(k) / current(k))
+    def row(k: String) = f"| $k | ${old(k)}%.2f | ${current(k)}%.2f | ${current(k) / old(k)}%.2fx |"
+    val md = new StringBuilder
+    val suspect = if (contended) " — CONTENDED HOST" else ""
+    // name the baseline ROUND AND FILE (VERDICT r11 #1): a reader must
+    // see which snapshot the ratios divide by
+    md ++= s"# BENCH_REGRESS — this run vs $BaselineFile (round $BaselineRound baseline, certified clean; factor 1.5)$suspect\n\n"
+    if (contended)
+      // name the ACTUAL trigger: a load_end-triggered flag previously
+      // printed the load_start explanation, sending a reader to debunk
+      // the wrong condition
+      md ++= f"**CONTENDED RUN ($contendReason)**: times are " +
+        "not comparable to a clean-host snapshot; any 'regressed' rows below " +
+        "are SUSPECT-HOST, not code verdicts (VERDICT r10 #6 — a load-1.74 " +
+        "official run flagged two phantom regressions the clean run contradicted).\n\n"
+    // disclose the verdict floor (self-review r13 pass 4): "251
+    // comparable, 0 regressed" must not read as "all 251 checked at
+    // 1.5x" when most sat under the 0.5s floor
+    val belowFloor = shared.size - floored.size
+    md ++= s"Comparable queries: ${shared.size} "
+    md ++= s"($belowFloor below the 0.5s verdict floor — " +
+      s"ratio verdicts cover the ${floored.size} at/above it); "
+    md ++= s"broken: ${broken.size}; "
+    md ++= s"regressed >=1.5x: ${regressed.size}; improved >=1.5x: ${improved.size}.\n\n"
+    if (broken.nonEmpty)
+      md ++= broken.mkString("Broken (ran before, failed now): ", ", ", "\n\n")
+    if (regressed.nonEmpty) {
+      val head = if (contended) "regressed (suspect-host)" else "regressed"
+      md ++= s"| $head | old s | new s | factor |\n|---|---|---|---|\n"
+      regressed.foreach(k => md ++= row(k) + "\n")
+      md ++= "\n"
     }
+    if (improved.nonEmpty) {
+      md ++= "| improved | old s | new s | factor |\n|---|---|---|---|\n"
+      improved.foreach(k => md ++= row(k) + "\n")
+    }
+    Files.writeString(Paths.get("BENCH_REGRESS.md"), md.toString)
+    val flag = if (contended) " [CONTENDED: regressions suspect-host]" else ""
+    println(s"[bench-regress] vs $BaselineFile (r$BaselineRound): " +
+      s"${shared.size} comparable, " +
+      s"${broken.size} broken, ${regressed.size} regressed >=1.5x, " +
+      s"${improved.size} improved >=1.5x -> BENCH_REGRESS.md$flag")
   }
 
   /** Signature of a query-name list — written next to the positional

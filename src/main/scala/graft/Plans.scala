@@ -40,8 +40,8 @@ object Plans {
     sb ++= "graph/cluster gates) is the BOUNDED driver-local fast path for\n"
     sb ++= "<=200k-edge pair graphs (TextRank precedent; spark.graft.cc.\n"
     sb ++= "localEdgeMax=0 disables). The distributed star contraction is the\n"
-    sb ++= ">200k path — law-equal in GraphSpec, probed at 10x in ScaleProbe's\n"
-    sb ++= "forced-distributed chain section.\n"
+    sb ++= ">200k path — law-equal in GraphSpec; its 10x forced-distributed\n"
+    sb ++= "chain run is recorded in COVERAGE.md \"Scale evidence\".\n"
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       val tree =
         try fn(spark, sfDir).queryExecution.executedPlan.toString

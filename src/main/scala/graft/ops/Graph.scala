@@ -138,9 +138,8 @@ object Graph extends QueryPack {
         (lit(150000L) + expr("(850 * incoming) div 1000")).as("r"))
   }
 
-  /** [[pagerankQ]] over any undirected `(a, b)` edge frame — exposed
-    * (like [[pagerankDirectedFrom]]) so the weak-scaling probe can
-    * drive it with replicated disjoint graphs (VERDICT r13 #6).
+  /** [[pagerankQ]] over any undirected `(a, b)` edge frame (like
+    * [[pagerankDirectedFrom]]).
     */
   private[ops] def pagerankFrom(e: DataFrame): DataFrame = {
     import e.sparkSession.implicits._
@@ -538,8 +537,7 @@ object Graph extends QueryPack {
       .withColumn("dst", $"kdst.i")
   }
 
-  /** Degree/wedge census of the oriented triangle build — the scale
-    * telemetry behind the ScaleProbe `triangles` section (VERDICT r11
+  /** Degree/wedge census of the oriented triangle build (VERDICT r11
     * #3). The wedge join's fanout is EXACTLY `Σ_src C(out_deg, 2)` over
     * the (degree,id)-oriented list — counted here from the out-degree
     * census WITHOUT building the join — next to the naive neighbor-pair

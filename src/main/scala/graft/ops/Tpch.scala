@@ -615,16 +615,17 @@ object Tpch extends QueryPack {
   }
 
   /** [[q21WaitingOrders]] over any (lineitem, orders, supplier-dim)
-    * triple — the scale-probe entry ([[ScaleProbeRel]]).
+    * triple.
     *
     * Form: ONE per-order aggregate (distinct suppliers, distinct
     * R-suppliers) replaces both correlated subqueries — "exists another
     * supplier's line" ⟺ n_supp ≥ 2, "no other supplier returned" ⟺
     * n_r_supp = 1 (l1's own line is R, so it contributes the 1). The
-    * naive EXISTS/NOT EXISTS translation ([[waitingOrdersSemiAntiFrom]])
-    * probes the FULL fact twice (semi + anti build sides = every
-    * lineitem row); measured at 10× sf0.1 ([[ScaleProbeRel]], identical
-    * output proven in-run) it degrades 8.2× (3.1s → 25.2s) while this
+    * naive EXISTS/NOT EXISTS translation (kept as the reference in
+    * LawsSpec, which asserts identical rows) probes the FULL fact twice
+    * (semi + anti build sides = every lineitem row); measured at 10×
+    * sf0.1 (COVERAGE.md §"Scale evidence") it degrades 8.2× (3.1s →
+    * 25.2s) while this
     * aggregate form grows 1.9× (4.1s → 7.6s) for 10× the data — the
     * order-keyed aggregate output is |orders|, not |lineitem|, and every
     * join after it is equi.
@@ -655,31 +656,6 @@ object Tpch extends QueryPack {
       .join(broadcast(sup), $"l_suppkey" === $"s_suppkey")
       .join(perOrder, $"l_orderkey" === $"agg_ok")
       .where($"n_supp" >= 2 && $"n_r_supp" === 1)
-      .groupBy($"s_name")
-      .agg(count(lit(1)).as("numwait"))
-      .orderBy($"numwait".desc, $"s_name")
-      .limit(20)
-  }
-
-  /** The textbook EXISTS/NOT EXISTS translation of Q21 — kept as the
-    * probe baseline that justifies the aggregate form above. Two
-    * fact-to-fact probes whose build sides are the whole lineitem table.
-    */
-  private[ops] def waitingOrdersSemiAntiFrom(li: DataFrame, ord: DataFrame,
-                                             sup: DataFrame): DataFrame = {
-    import li.sparkSession.implicits._
-    val l1 = li.where($"l_returnflag" === "R")
-      .select($"l_orderkey", $"l_suppkey")
-      .join(ord.where($"o_orderstatus" === "F").select($"o_orderkey"),
-            $"l_orderkey" === $"o_orderkey")
-      .join(broadcast(sup), $"l_suppkey" === $"s_suppkey")
-    val others = li.select($"l_orderkey".as("o2k"), $"l_suppkey".as("s2k"))
-    val othersR = li.where($"l_returnflag" === "R")
-      .select($"l_orderkey".as("o3k"), $"l_suppkey".as("s3k"))
-    l1.join(others, $"l_orderkey" === $"o2k" && $"l_suppkey" =!= $"s2k",
-            "left_semi")
-      .join(othersR, $"l_orderkey" === $"o3k" && $"l_suppkey" =!= $"s3k",
-            "left_anti")
       .groupBy($"s_name")
       .agg(count(lit(1)).as("numwait"))
       .orderBy($"numwait".desc, $"s_name")

@@ -78,9 +78,7 @@ object Classify extends QueryPack {
   def nbcConfusion(spark: SparkSession, dir: String): DataFrame =
     nbcConfusionFrom(Tables.documents(spark, dir))
 
-  /** Composable form over any (doc_id, text, lang) frame — the seam the
-    * 10× scale probe drives (ScaleProbe convention).
-    */
+  /** Composable form over any (doc_id, text, lang) frame. */
   def nbcConfusionFrom(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
     // Pinned (r17) when the optimizer estimate crosses the adaptive

@@ -519,9 +519,6 @@ object Curation extends QueryPack {
   def curationFunnel(spark: SparkSession, dir: String): DataFrame =
     curationFunnelFrom(Tables.documents(spark, dir))
 
-  /** [[curationFunnel]] over any (doc_id, lang, text, n_chars) corpus —
-    * also the [[ScaleProbe]] entry.
-    */
   /** The funnel's quality-scoring stage alone (adds ws/n_tokens/score/
     * qual): map-side only, so the STREAMING ingest path
     * ([[graft.streaming.CurationStream]]) can run the identical features
@@ -542,6 +539,7 @@ object Curation extends QueryPack {
       .withColumn("qual", $"score" >= 3)
   }
 
+  /** [[curationFunnel]] over any (doc_id, lang, text, n_chars) corpus. */
   private[graft] def curationFunnelFrom(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
     val scored = scoreDocs(docs)

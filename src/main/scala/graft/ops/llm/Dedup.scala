@@ -300,15 +300,6 @@ object Dedup extends QueryPack {
         lit(0L).as("n_occ"), lit(0L).as("n_docs"))
       .where(lit(false))
 
-    // stage telemetry for tuning runs (same contract as SuffixIndex)
-    val dbg = java.lang.Boolean.getBoolean("graft.suffix.debug") ||
-      sys.env.get("SPARK_GRAFT_SUFFIX_DEBUG").contains("1")
-    var tDbg = System.nanoTime()
-    def lap(tag: String): Unit = if (dbg) {
-      println(f"[longest-dup] $tag: ${(System.nanoTime() - tDbg) / 1e9}%.1fs")
-      tDbg = System.nanoTime()
-    }
-
     // ---- bracket: finest round with a FULL tie (both positions have
     // ≥ compareLen remaining chars ⇒ true LCP ≥ compareLen; padded
     // short-suffix ties certify only their own length and don't count)
@@ -338,7 +329,6 @@ object Dedup extends QueryPack {
         val anyTie = !td.isEmpty
         if (anyTie) { loRound = rd; lo = rd.compareLen; tiedDocs = td }
         else hiBound = rd.compareLen - 1
-        lap(s"bracket anyTie c=${rd.compareLen} -> $anyTie")
       }
     }
 
@@ -379,7 +369,6 @@ object Dedup extends QueryPack {
       // precompute the offset ranks at fixed multiples of c once; the
       // probes' only per-L window is the single L−c offset
       val kPre = math.max(ceilDiv(hi, c) - 1, 0)
-      if (dbg) { val n = tiedDocs.count(); lap(s"tiedDocs n=$n (dbg-only job)") }
       // broadcast the id set: without the hint the semi-join plans as a
       // sort-merge and shuffles the corpus-sized rank frame (measured
       // ~1.5s of the pf pin at sf0.1 for a 303-doc id set). The frame is
@@ -428,7 +417,6 @@ object Dedup extends QueryPack {
           pf0.repartition(parts, $"doc_id")) { (df, k) =>
         df.withColumn(s"rk$k", lead($"r", k * c).over(byPos))
       }.transform(graft.state.Materialize.pin)
-      lap(s"pf build (c=$c, kPre=$kPre, rows=$pfRows, parts=$parts)")
 
       // ranks at offsets {0, c, …, (m−2)c, L−c}: consecutive gaps ≤ c,
       // union covers [0, L) ⇒ tuple equality ⟺ L-gram equality (every
@@ -540,8 +528,6 @@ object Dedup extends QueryPack {
         val firstBad = cuts.filterNot(dup.contains).headOption
         if (good.nonEmpty) l0 = good.max
         h0 = firstBad.map(_ - 1).getOrElse(h0)
-        lap(s"probe batch ${cuts.size} cuts in [${cuts.head}, ${cuts.last}]" +
-          s" -> [$l0, $h0]")
       }
       val lStar = l0
       val kd = keyed(lStar)
@@ -605,9 +591,7 @@ object Dedup extends QueryPack {
         .otherwise(lit("")))
   }
 
-  /** Composable form over any (doc_id, source, lang) frame — the seam
-    * the 10× scale probe drives (ScaleProbe convention).
-    */
+  /** Composable form over any (doc_id, source, lang) frame. */
   def urlDedupFrom(d: DataFrame): DataFrame = {
     import d.sparkSession.implicits._
     // ONE corpus pass (r18, from the committed scan-census sweep —
@@ -758,9 +742,8 @@ object Dedup extends QueryPack {
   }
 
   /** The LSH banding subtree of [[nearDupPairs]] — (doc_id, band, bucket),
-    * 32 rows per doc — factored out so [[PairCountProbe]] can measure
-    * bucket-size distribution (candidate fanout = Σ C(size,2) per group)
-    * without re-deriving the pipeline.
+    * 32 rows per doc. Its bucket-size distribution gives the candidate
+    * fanout (Σ C(size,2) per group) without running the pair join.
     *
     * The 128-wide MinHash signature as 128 min() aggregates in ONE
     * codegen'd hash aggregate — map-side partial minima, so the shuffle
@@ -915,10 +898,7 @@ object Dedup extends QueryPack {
     * 4-block pigeonhole banding (exact for hamming ≤ 3), verified with
     * bit_count(xor).
     */
-  /** The pinned per-doc 32-bit SimHash signature frame — factored out
-    * (r18) so [[PairCountProbe]] can census the banding-key
-    * distribution over the exact production frame (VERDICT r17 #5).
-    */
+  /** The pinned per-doc 32-bit SimHash signature frame. */
   private[llm] def simhashSignatures(spark: SparkSession,
                                      dir: String): DataFrame = {
     import spark.implicits._
@@ -1118,7 +1098,6 @@ object Dedup extends QueryPack {
     }
     def largeStar(df: DataFrame): DataFrame = largeStarStep(df)
     def smallStar(df: DataFrame): DataFrame = smallStarStep(df)
-    val dbg = java.lang.Boolean.getBoolean("graft.graph.debug")
     var prev = fp(e)
     var converged = false
     var round = 0
@@ -1141,7 +1120,6 @@ object Dedup extends QueryPack {
       graft.state.Materialize.releasePinned(e)
       e = next
       round += 1
-      if (dbg) println(s"[star-components] round $round fp=$fpS")
     }
     require(converged, s"star contraction did not converge in $round rounds")
     // star forest: every non-minimum vertex carries exactly one edge to
@@ -1166,10 +1144,9 @@ object Dedup extends QueryPack {
     *  1. [[IvfCellsKey]] set → that K (explicit always wins — the probe
     *     and any deployment that has already sized its index set this).
     *  2. else K = max([[IvfMinCells]], ceil(rows / target)) where
-    *     target = [[IvfTargetCellRowsKey]] (conf, else
-    *     [[IvfTargetCellRowsEnv]], else 2^16); target ≤ 0 pins K to the
-    *     floor. The row count is ONE metadata-cheap count per distinct
-    *     corpus plan, memoized per session.
+    *     target = [[IvfTargetCellRowsKey]] (conf, else 2^16); target ≤ 0
+    *     pins K to the floor. The row count is ONE metadata-cheap count
+    *     per distinct corpus plan, memoized per session.
     *
     * The centroid planes are the same md5 formula at every K
     * ([[ivfCentroids]]), so K = 4 reproduces the gate fixture
@@ -1179,12 +1156,11 @@ object Dedup extends QueryPack {
     * rows/2^16 cells and therefore CONSTANT expected occupancy: the
     * within-cell pairwise verify is O(occ) per vector and the coarse
     * assignment O(K·dim) per vector — the classic IVF trade, with the
-    * occupancy-held flatness measured in [[ScaleProbe]]'s
-    * `weak-ann-kheld-*` rungs.
+    * occupancy-held flatness measured in the `weak-ann-kheld-*` rungs
+    * of COVERAGE.md §"Scale evidence".
     */
   val IvfCellsKey = "spark.graft.ivf.cells"
   val IvfTargetCellRowsKey = "spark.graft.ivf.targetCellRows"
-  val IvfTargetCellRowsEnv = "SPARK_GRAFT_IVF_TARGET_CELL_ROWS"
 
   /** Autopilot target occupancy (rows per cell): 2^16 × 64-dim doubles
     * ≈ 34 MB of vectors per cell — one executor task's working set for
@@ -1230,12 +1206,8 @@ object Dedup extends QueryPack {
           s"$IvfCellsKey must be in [1, ${Int.MaxValue}], got $k")
         k.toInt
       case None =>
-        val (src, raw) = conf.getOption(IvfTargetCellRowsKey)
-          .map((IvfTargetCellRowsKey, _))
-          .orElse(sys.env.get(IvfTargetCellRowsEnv)
-            .map((IvfTargetCellRowsEnv, _)))
-          .getOrElse(("default", IvfTargetCellRowsDefault.toString))
-        val target = loudLong(src, raw,
+        val target = loudLong(IvfTargetCellRowsKey,
+          conf.get(IvfTargetCellRowsKey, IvfTargetCellRowsDefault.toString),
           "a target rows-per-cell (<= 0 pins K to the floor)")
         if (target <= 0) IvfMinCells
         else {
@@ -1282,8 +1254,8 @@ object Dedup extends QueryPack {
     * set: cells 0..3 are byte-identical at every K, which is what keeps
     * the K = 4 gate oracles (which rebuild those planes in SQL) stable
     * while production K scales with the corpus (VERDICT r16 #1).
-    * Memoized per K — the probe's occupancy-held ladder resolves
-    * several K values in one session.
+    * Memoized per K — a session may resolve several K values (one per
+    * corpus size, or an explicit [[IvfCellsKey]]).
     */
   private val ivfCentroidCache = new java.util.concurrent.ConcurrentHashMap[
     Int, Array[Array[Double]]]()
@@ -1494,8 +1466,7 @@ object Dedup extends QueryPack {
 
 
   /** The cell-shuffle pair engine behind [[dedupEmbedding]], over any
-    * `(vec_id, v, nrm)` corpus — factored out so the scale probe
-    * ([[ScaleProbe]]) can drive it with multiplied corpora.
+    * `(vec_id, v, nrm)` corpus.
     *
     * `withCentroidCos = true` additionally emits each member's cosine to
     * its OWN cell centroid (`ci`, `cj`) — the SemDeDup keep quantity —
@@ -1571,8 +1542,8 @@ object Dedup extends QueryPack {
       }
     }
     // two encoder shapes, not one widened-and-dropped tuple: the
-    // default path is the O(n²/K) hot core under every gate, cached
-    // pair frame, and scale probe — it must not pay per-pair widening
+    // default path is the O(n²/K) hot core under every gate and the
+    // cached pair frame — it must not pay per-pair widening
     // and serialization of two dead doubles (self-review r12 pass 4)
     if (!wantCc)
       keyed.groupByKey(_._1).flatMapGroups { (key, rows) =>
@@ -1857,9 +1828,7 @@ object Dedup extends QueryPack {
   def paraDedup(spark: SparkSession, dir: String): DataFrame =
     paraDedupFrom(Tables.documents(spark, dir))
 
-  /** [[paraDedup]] over any (doc_id, text) corpus — also the entry point
-    * [[ScaleProbe]] drives at multiplied corpus sizes.
-    */
+  /** [[paraDedup]] over any (doc_id, text) corpus. */
   def paraDedupFrom(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
     val segs = docs
@@ -2021,9 +1990,7 @@ object Dedup extends QueryPack {
       .agg(min($"i").as("s"), (max($"i") + k).as("e"))
   }
 
-  /** [[substringSpans]] over any (doc_id, text) corpus — also the
-    * [[ScaleProbe]] entry.
-    */
+  /** [[substringSpans]] over any (doc_id, text) corpus. */
   def substringSpansFrom(docs: DataFrame): DataFrame =
     spansReport(dupSpans(docs))
 
@@ -2256,8 +2223,8 @@ object Dedup extends QueryPack {
     // Pinned (r17): the chunk frame feeds BOTH the dup census and the
     // join-back below — unpinned, the per-byte-position md5 explode (the
     // chunker's hot tower) ran twice per query. Call-site pin, not
-    // inside cdcChunkRowsBatch: single-consumer callers (ScaleProbe,
-    // the streaming twin's tests) would pay the barrier for nothing.
+    // inside cdcChunkRowsBatch: single-consumer callers (the streaming
+    // twin's tests) would pay the barrier for nothing.
     val chunks = graft.state.Materialize.pin(cdcChunkRowsBatch(
       Tables.documents(spark, dir).select($"doc_id", $"text")))
     val dup = chunks.groupBy($"h").agg(countDistinct($"doc_id").as("nd"))

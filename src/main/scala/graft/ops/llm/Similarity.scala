@@ -160,9 +160,7 @@ object Similarity extends QueryPack {
       .withColumn("nrm", expr("sqrt(graft_dot(v, v))")))
   }
 
-  /** [[hardNegatives]] over any (vec_id, label, v, nrm) frame — the
-    * ScaleProbe entry.
-    */
+  /** [[hardNegatives]] over any (vec_id, label, v, nrm) frame. */
   private[llm] def hardNegativesFrom(n: DataFrame): DataFrame = {
     import n.sparkSession.implicits._
     val q = n.filter($"vec_id" < 10)
@@ -464,9 +462,7 @@ object Similarity extends QueryPack {
   private[llm] def pqModel(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
     pqModelFrom(corpus(spark, dir))
 
-  /** [[pqModel]] over any (vec_id, v) corpus — also the [[ScaleProbe]]
-    * entry.
-    */
+  /** [[pqModel]] over any (vec_id, v) corpus. */
   private[llm] def pqModelFrom(n: DataFrame, keep: Seq[String] = Nil): (DataFrame, DataFrame) = {
     val spark = n.sparkSession
     import spark.implicits._
@@ -543,9 +539,7 @@ object Similarity extends QueryPack {
   def pqAdc(spark: SparkSession, dir: String): DataFrame =
     pqAdcFrom(corpus(spark, dir))
 
-  /** [[pqAdc]] over any (vec_id, v) corpus — also the [[ScaleProbe]]
-    * entry.
-    */
+  /** [[pqAdc]] over any (vec_id, v) corpus. */
   private[llm] def pqAdcFrom(n: DataFrame): DataFrame = {
     val spark = n.sparkSession
     import spark.implicits._
@@ -971,63 +965,6 @@ object Similarity extends QueryPack {
       .orderBy($"vec_id", $"rk")
   }
 
-  /** Recall@k instrumentation of the production IVF approximate search
-    * (VERDICT r9 #7): the same probe-selection and candidate plumbing as
-    * [[annIvf]] / [[annIvfMultiProbe]], parameterized by probe breadth,
-    * scored against the brute-force top-k as ground truth. Per query
-    * emits (n_cand, n_hit of the true top-k found); the ScaleProbe
-    * section aggregates to mean recall@k at 1× and 10× corpus — the
-    * scale where cell occupancy (and therefore the single-probe recall
-    * floor) actually shifts. Ties broken by (sim DESC, n_id) on BOTH
-    * paths, so recall is deterministic even on a duplicated corpus.
-    * `nprobe = IvfCells` degenerates to exhaustive search — its
-    * recall-1.0 row is the section's self-check.
-    */
-  private[llm] def ivfRecallProbe(n: DataFrame, k: Int, nprobe: Int,
-                                  nQ: Int = 16): DataFrame = {
-    import n.sparkSession.implicits._
-    // same single-resolution discipline as annIvfMultiProbe: the query
-    // base is a subset of n, so K comes from the full corpus only
-    val k = Dedup.ivfCellsFor(n)
-    val cells = Dedup.withIvfCell(n, k)
-    val qBase = n.filter($"vec_id" < nQ)
-    val wProbe = Window.partitionBy($"q_id").orderBy($"dot".desc, $"probe_cell")
-    val probes = Dedup.withIvfDots(qBase, k)
-      .select($"vec_id".as("q_id"), $"v".as("vq"), $"nrm".as("nq"),
-        explode(expr(s"""transform(sequence(0, ${k - 1}), c ->
-          struct(c AS probe_cell,
-                 element_at(array(${(0 until k)
-                   .map(c => s"_ivf_d$c").mkString(", ")}), c + 1) AS dot))"""))
-          .as("p"))
-      .select($"q_id", $"vq", $"nq", $"p.probe_cell".as("probe_cell"),
-        $"p.dot".as("dot"))
-      .withColumn("prn", row_number().over(wProbe))
-      .filter($"prn" <= nprobe)
-      .select($"q_id", $"vq", $"nq", $"probe_cell")
-    val c = cells.select($"vec_id".as("n_id"), $"v".as("vc"), $"nrm".as("nc"),
-      $"cell")
-    val w = Window.partitionBy($"q_id").orderBy($"sim".desc, $"n_id")
-    val wCnt = Window.partitionBy($"q_id")
-    val approx = c
-      .join(broadcast(probes), $"cell" === $"probe_cell" && $"n_id" =!= $"q_id")
-      .withColumn("sim", expr(dotExpr) / ($"nq" * $"nc"))
-      .withColumn("n_cand", count(lit(1)).over(wCnt))
-      .withColumn("rk", row_number().over(w))
-      .filter($"rk" <= k)
-      .select($"q_id", $"n_id", $"n_cand")
-    val brute = n.select($"vec_id".as("n_id"), $"v".as("vc"), $"nrm".as("nc"))
-      .join(broadcast(qBase.select($"vec_id".as("q_id"), $"v".as("vq"),
-        $"nrm".as("nq"))), $"n_id" =!= $"q_id")
-      .withColumn("sim", expr(dotExpr) / ($"nq" * $"nc"))
-      .withColumn("rk", row_number().over(w))
-      .filter($"rk" <= k)
-      .select($"q_id", $"n_id")
-    approx.join(brute.withColumn("hit", lit(1L)), Seq("q_id", "n_id"), "left")
-      .groupBy($"q_id")
-      .agg(max($"n_cand").as("n_cand"),
-           sum(coalesce($"hit", lit(0L))).as("n_hit"))
-  }
-
   /** Diversified top-k rerank — the single-pass (order-free) form of
     * maximal marginal relevance: every candidate's score is penalized by
     * λ × its max similarity to any HIGHER-base-ranked candidate, then the
@@ -1102,7 +1039,7 @@ object Similarity extends QueryPack {
   def ivfAdd(spark: SparkSession, dir: String): DataFrame =
     ivfAddFrom(corpus(spark, dir))
 
-  /** [[ivfAdd]] over any (vec_id, v) corpus — the probe entry. */
+  /** [[ivfAdd]] over any (vec_id, v) corpus. */
   private[graft] def ivfAddFrom(c: DataFrame): DataFrame = {
     import c.sparkSession.implicits._
     val all = Dedup.withIvfCell(c)

@@ -202,15 +202,6 @@ object SuffixIndex {
     val pin: DataFrame => DataFrame =
       if (retain) graft.state.Materialize.pinRetained
       else graft.state.Materialize.pin
-    // stage telemetry for tuning runs (-Dgraft.suffix.debug=true or
-    // SPARK_GRAFT_SUFFIX_DEBUG=1 — the env form survives sbt's fork)
-    val dbg = java.lang.Boolean.getBoolean("graft.suffix.debug") ||
-      sys.env.get("SPARK_GRAFT_SUFFIX_DEBUG").contains("1")
-    var tDbg = System.nanoTime()
-    def lap(tag: String): Unit = if (dbg) {
-      println(f"[suffix-index] $tag: ${(System.nanoTime() - tDbg) / 1e9}%.1fs")
-      tDbg = System.nanoTime()
-    }
     // BYTE-level (UTF-8) semantics, declared round 10: positions are
     // byte offsets, lengths are byte counts, and the suffix order is
     // byte-lexicographic — which for UTF-8 IS code-point order, so the
@@ -242,7 +233,6 @@ object SuffixIndex {
       .select($"doc_id", $"i",
         expr("graft_pack8(text, i)").as("p1"),
         expr("graft_pack8(text, i + 7)").as("p2"))
-    lap("prelude (maxLen/lens)")
     // ---- seed: two-phase bucketed COUNT-rank (0-based rows-strictly-
     // before; rank() not dense_rank — ties share their group minimum).
     // Bucket = the first two bytes (p1's top 16 bits) — ≤ 256² buckets,
@@ -279,7 +269,6 @@ object SuffixIndex {
       .join(broadcast(offs0), Seq("b"))
       .select($"doc_id", $"i", ($"rl" - 1 + $"off").as("r"), $"fin")
       .transform(pin)
-    lap("seed rank")
     var rounds = Vector(Round(14, seedRanked))
     // active/frozen split: `full` is the current whole frame (the lead
     // windows must see EVERY position — an active row's offset rank may
@@ -329,7 +318,6 @@ object SuffixIndex {
       // stop when nothing split (fixed point: only never-splitting ties
       // — identical cross-doc suffixes — remain) or everything is frozen
       more = split && !active.isEmpty
-      lap(s"round d=$d (split=$split)")
     }
     // the dense spelling of the finest frame, derived on demand: ranks
     // are count-ranks in [0, nSuffixes), so a width-of-rank-range bucket

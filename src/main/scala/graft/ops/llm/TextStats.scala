@@ -319,9 +319,9 @@ object TextStats extends QueryPack {
   def winnowFingerprint(spark: SparkSession, dir: String): DataFrame =
     winnowReport(winnowSelForDir(spark, dir))
 
-  /** [[winnowFingerprint]] over any (doc_id, text) corpus — also the
-    * [[ScaleProbe]] entry. Un-memoized (laws/probes need fresh builds);
-    * the dir-keyed gates share [[winnowSelForDir]]'s frame instead.
+  /** [[winnowFingerprint]] over any (doc_id, text) corpus. Un-memoized
+    * (laws need fresh builds); the dir-keyed gates share
+    * [[winnowSelForDir]]'s frame instead.
     */
   def winnowFrom(docs: DataFrame): DataFrame =
     winnowReport(winnowMins(docs))
@@ -407,8 +407,7 @@ object TextStats extends QueryPack {
   }
 
   /** The selected (doc_id, wmin) fingerprint set — the inverted-index
-    * universe of [[winnowPairsFrom]] — exposed for [[PairCountProbe]]'s
-    * df-distribution telemetry.
+    * universe of [[winnowPairsFrom]].
     */
   private[ops] def winnowSelected(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
@@ -432,8 +431,8 @@ object TextStats extends QueryPack {
   def winnowPairs(spark: SparkSession, dir: String): DataFrame =
     winnowPairsCoreSel(winnowSelForDir(spark, dir), _ => 50L)
 
-  /** [[winnowPairs]] over any (doc_id, text) corpus — also the
-    * [[ScaleProbe]] entry. Cap pinned at 50 for oracle parity.
+  /** [[winnowPairs]] over any (doc_id, text) corpus. Cap pinned at 50
+    * for oracle parity.
     */
   def winnowPairsFrom(docs: DataFrame): DataFrame =
     winnowPairsCore(docs, _ => 50L)
@@ -1053,8 +1052,8 @@ object TextStats extends QueryPack {
   def spanCorrupt(spark: SparkSession, dir: String): DataFrame =
     spanCorruptFrom(Tables.documents(spark, dir))
 
-  /** [[spanCorrupt]] over any (doc_id, text) corpus — the probe entry:
-    * the census/checksum frame the gate hashes.
+  /** [[spanCorrupt]] over any (doc_id, text) corpus: the
+    * census/checksum frame the gate hashes.
     */
   private[graft] def spanCorruptFrom(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
@@ -1131,7 +1130,7 @@ object TextStats extends QueryPack {
   def codeSwitch(spark: SparkSession, dir: String): DataFrame =
     codeSwitchFrom(Tables.documents(spark, dir))
 
-  /** [[codeSwitch]] over any (doc_id, text) corpus — the probe entry. */
+  /** [[codeSwitch]] over any (doc_id, text) corpus. */
   private[graft] def codeSwitchFrom(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
     val segW = 20
@@ -1261,7 +1260,7 @@ object TextStats extends QueryPack {
   def ngramNovelty(spark: SparkSession, dir: String): DataFrame =
     ngramNoveltyFrom(Tables.documents(spark, dir))
 
-  /** [[ngramNovelty]] over any (source, text) corpus — scale-probe entry. */
+  /** [[ngramNovelty]] over any (source, text) corpus. */
   private[graft] def ngramNoveltyFrom(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
     val g = docs

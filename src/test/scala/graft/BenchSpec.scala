@@ -1,10 +1,14 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** The driver parses Bench's JSON out of the LAST 2000 chars of sbt
   * output; `Bench.compactLine` exists to always fit that window. These
-  * tests pin the contract without a SparkSession.
+  * tests pin the contract without a SparkSession, along with the rest of
+  * the harness surface: the regress baseline and the mains and env
+  * names `src/main` exposes.
   */
 class BenchSpec extends AnyFunSuite {
 
@@ -19,10 +23,7 @@ class BenchSpec extends AnyFunSuite {
   }
 
   test("a full-round-sized result set emits the FULL vector positionally " +
-       "(sorted names + qsig) within the budget, and snapshotQueries " +
-       "round-trips it exactly (VERDICT r12 #3: the name->time map is " +
-       "~5.8k chars at 251 queries and can never fit the 1800-char " +
-       "scrape window)") {
+       "(sorted names + qsig) within the budget") {
     // 251 realistic-length names, realistic time spread
     val full = (1 to 251).map(i =>
       f"llm_realistic_query_name_$i%03d" -> (i * 0.041 % 7.3))
@@ -32,82 +33,13 @@ class BenchSpec extends AnyFunSuite {
         """"steal_cpu_s":0.03,"reps":3},"baseline_s":142.01,"baseline_round":10""")
     assert(line.length <= 1800, s"len=${line.length}")
     assert(line.contains("\"queries_key\":\"sorted_names\""))
-    assert(line.contains("\"qsig\":\""))
-    // decode as a driver-shaped snapshot: every one of the 251 entries
-    // comes back under its right name at 2-decimal precision
-    val snapshot = s"""{"parsed":$line}"""
+    // a reader holding the sorted name list can prove it matches the
+    // vector's, then zip: every entry at its sorted position, 2 decimals
     val names = full.map(_._1).sorted
-    val (decoded, note) = Bench.snapshotQueries(snapshot, names)
-    assert(note.isEmpty, "full positional decode must carry no degraded-decode note")
-    assert(decoded.size === 251)
-    full.foreach { case (k, v) =>
-      assert(decoded(k) === math.round(v * 100) / 100.0, k)
-    }
-    // a decoder whose query set DIFFERS must refuse the positional zip
-    // (mislabeling every entry is worse than decoding nothing) and fall
-    // back to the snapshot's named `top` object — the slowest entries,
-    // comparable across any two rounds
-    val drifted = ("new_query_name" +: names.tail).sorted
-    val (fallback, fnote) = Bench.snapshotQueries(snapshot, drifted)
-    assert(fallback.nonEmpty && fallback.size < 251)
-    assert(fnote.exists(_.contains("UNDECODABLE")),
-      "top-N fallback must carry the loud degraded-decode note")
-    val slowest = full.sortBy(-_._2).take(fallback.size).map(_._1).toSet
-    assert(fallback.keySet === slowest,
-      "fallback must carry the SLOWEST queries, name-keyed")
-    fallback.foreach { case (k, v) =>
-      assert(v === math.round(full.toMap.apply(k) * 100) / 100.0, k)
-    }
-  }
-
-  test("the positional vector decodes through a committed " +
-       "CORRECTNESS_r{N}.json name list when the CURRENT query set has " +
-       "drifted (the file records each round's exact set, so the sig " +
-       "validates the zip even across rounds)") {
-    val full = (1 to 40).map(i => f"q_name_$i%02d" -> (i * 0.11))
-    val line = Bench.compactLine(full, full.map(_._2).sum,
-      "/root/testdata/sf0.1",
-      // force the positional form despite the small set: tiny budget
-      // still above the positional render, below the full object
-      budget = 700)
-    assert(line.contains("\"queries\":["), line)
-    val snapshot = s"""{"parsed":$line}"""
-    val names = full.map(_._1).sorted
-    val drifted = ("zz_new_gate" +: names).sorted
-    val correctness = names.map(n => s""""$n":{"rows_match":true}""")
-      .mkString("{", ",", "}")
-    withDir(Map("CORRECTNESS_r99.json" -> correctness)) { dir =>
-      val (decoded, note) = Bench.snapshotQueries(snapshot, drifted, dir)
-      assert(note.isEmpty, "CORRECTNESS-list decode is full, not degraded")
-      assert(decoded.size === 40)
-      full.foreach { case (k, v) =>
-        assert(decoded(k) === math.round(v * 100) / 100.0, k)
-      }
-    }
-  }
-
-  test("snapshotQueries still reads the object form and the raw-tail " +
-       "fragment form of older snapshots") {
-    val obj = """{"parsed":{"queries":{"q_a":1.5,"q_b":0.25}}}"""
-    assert(Bench.snapshotQueries(obj, Seq("q_a", "q_b"))._1 ===
-      Map("q_a" -> 1.5, "q_b" -> 0.25))
-    val direct = """{"queries":{"q_a":2.5}}"""
-    assert(Bench.snapshotQueries(direct, Seq("q_a"))._1 === Map("q_a" -> 2.5))
-    val tail = """{"parsed":null,"tail":"ame_x\":9.99,\"q_c\":3.25,\"q_d\":0.75}"}"""
-    val (got, tnote) = Bench.snapshotQueries(tail, Seq.empty)
-    assert(got === Map("q_c" -> 3.25, "q_d" -> 0.75),
-      "boundary-cut pair must be dropped, clean pairs recovered")
-    // the tail branch recovers only whatever survives the 2000-char
-    // scrape window — it must say so like the positional fallback does,
-    // or BENCH_REGRESS.md reports a silently shrunken comparable set
-    // (ADVICE r13)
-    // ": 2 pairs recovered" — the count token anchored on both sides:
-    // a bare "2" matched the note's "2000-char" (ADVICE r14), and
-    // "2 pairs" still matched any count ENDING in 2, e.g. "12 pairs"
-    // (ADVICE r15)
-    assert(tnote.exists(n => n.contains("UNCHECKED") &&
-        n.contains(": 2 pairs recovered")),
-      s"tail decode must carry a loud degraded-decode note, got $tnote")
+    assert(line.contains(s""""qsig":"${Bench.namesSig(names)}""""), line)
+    val vector = raw""""queries":\[([^\]]*)\]""".r.findFirstMatchIn(line)
+      .map(_.group(1).split(",").map(_.toDouble).toSeq).getOrElse(Seq.empty)
+    assert(vector === names.map(n => math.round(full.toMap.apply(n) * 100) / 100.0))
   }
 
   test("truncated last-resort view keeps the slowest queries and reports " +
@@ -138,107 +70,48 @@ class BenchSpec extends AnyFunSuite {
     assert(line.endsWith("\"sf\":\"/weird\\\"dir\\\\path\"}"), line)
   }
 
-  // --- baseline picker (VERDICT r11 #1: the regress guard must skip
-  // contended snapshots instead of diffing the newest unconditionally) ---
-
-  private def snap(contended: Option[Boolean],
-                   loads: Option[(Double, Double)] = None): String = {
-    val env = (contended, loads) match {
-      case (Some(c), _) =>
-        s""""env":{"load_start":0.5,"load_end":1.0,"contended":$c,"reps":3}"""
-      case (None, Some((ls, le))) => // pre-r11 shape: loads, no flag
-        s""""env":{"load_start":$ls,"load_end":$le,"reps":3}"""
-      case _ => "\"env\":{}"
-    }
-    s"""{"parsed":{"metric":"total","value":100.0,$env,"queries":{"q1":1.0}}}"""
+  test("the pinned regress baseline is committed and its queries object " +
+       "decodes to every current query name") {
+    val path = Paths.get(Bench.BaselineFile)
+    assert(Files.isRegularFile(path), s"$path is not committed")
+    val times = Bench.snapshotQueries(Files.readString(path))
+    assert(times.keySet === SparkEntry.queries.keySet)
+    assert(times.size === 252)
+    assert(times.values.forall(_ > 0))
+    // the positional compact twin is stdout-only, never a baseline
+    intercept[IllegalArgumentException](
+      Bench.snapshotQueries("""{"queries":[1.0,2.0]}"""))
   }
 
-  private def withDir(files: Map[String, String])(
-      f: java.nio.file.Path => Unit): Unit = {
-    val dir = java.nio.file.Files.createTempDirectory("benchspec")
-    try {
-      files.foreach { case (name, body) =>
-        java.nio.file.Files.writeString(dir.resolve(name), body)
+  // --- harness surface: diagnostic mains and env knobs must not regrow ---
+
+  test("src/main defines only the harness mains and reads only the " +
+       "harness env names, with no graft.* JVM debug property") {
+    val walk = Files.walk(Paths.get("src/main/scala"))
+    val sources =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .map(p => p -> Files.readString(p)).toList
+      finally walk.close()
+    assert(sources.nonEmpty, "run from the repository root")
+    val objectDecl = raw"(?m)^\s*object\s+(\w+)".r
+    val mains = sources.flatMap { case (_, text) =>
+      raw"\bdef\s+main\s*\(".r.findAllMatchIn(text).map { m =>
+        objectDecl.findAllMatchIn(text.substring(0, m.start))
+          .map(_.group(1)).toSeq.last
       }
-      f(dir)
-    } finally {
-      files.keys.foreach(n =>
-        java.nio.file.Files.deleteIfExists(dir.resolve(n)))
-      java.nio.file.Files.deleteIfExists(dir)
     }
-  }
-
-  test("picker skips a contended newest snapshot for the older clean one") {
-    withDir(Map(
-      "BENCH_r11.json" -> snap(Some(true)),
-      "BENCH_r10.json" -> snap(Some(false)))) { dir =>
-      val pick = Bench.pickBaseline(dir).get
-      assert(pick.round === 10)
-      assert(pick.cleanCertified)
-      assert(pick.path.getFileName.toString === "BENCH_r10.json")
+    assert(mains.sorted === Seq("Bench", "PlanCapture", "Plans",
+      "SampleStreamJob", "StreamJob", "Verify"))
+    val envNames = sources.flatMap { case (_, text) =>
+      raw"SPARK_GRAFT_[A-Z0-9_]+".r.findAllIn(text)
+    }.toSet
+    assert(envNames === Set("SPARK_GRAFT_CPUS", "SPARK_GRAFT_SF_DIR",
+      "SPARK_GRAFT_BENCH_ONLY", "SPARK_GRAFT_BENCH_REPS",
+      "SPARK_GRAFT_VERIFY_ONLY", "SPARK_GRAFT_MATERIALIZE"))
+    val debugProps = sources.flatMap { case (p, text) =>
+      raw"""(getBoolean|getProperty|props\.get|props)\(\s*"graft\.""".r
+        .findAllIn(text).map(m => s"$p: $m")
     }
-  }
-
-  test("picker prefers the clean-adopted artifact within the same round") {
-    withDir(Map(
-      "BENCH_r11.json"       -> snap(Some(true)),
-      "BENCH_clean_r11.json" -> snap(Some(false)),
-      "BENCH_r10.json"       -> snap(Some(false)))) { dir =>
-      val pick = Bench.pickBaseline(dir).get
-      assert(pick.round === 11)
-      assert(pick.cleanCertified)
-      assert(pick.path.getFileName.toString === "BENCH_clean_r11.json")
-    }
-  }
-
-  test("pre-r11 snapshot without a flag derives contention from its loads") {
-    // r10-shaped: no contended field; load_start 1.74 >= 1.5 ⇒ contended,
-    // so the clean r9 wins
-    withDir(Map(
-      "BENCH_r10.json" -> snap(None, Some((1.74, 2.35))),
-      "BENCH_r09.json" -> snap(None, Some((0.3, 1.2))))) { dir =>
-      val pick = Bench.pickBaseline(dir).get
-      assert(pick.round === 9)
-      assert(pick.cleanCertified)
-    }
-  }
-
-  test("all-contended falls back to the newest, flagged uncertified") {
-    withDir(Map(
-      "BENCH_r11.json" -> snap(Some(true)),
-      "BENCH_r10.json" -> snap(None, Some((1.74, 2.35))))) { dir =>
-      val pick = Bench.pickBaseline(dir).get
-      assert(pick.round === 11)
-      assert(!pick.cleanCertified)
-    }
-  }
-
-  test("all-contended fallback prefers the newest PARSEABLE snapshot " +
-       "over a corrupt newer one (a truncated file would make the " +
-       "guard's own read throw and skip the report entirely)") {
-    withDir(Map(
-      "BENCH_r12.json" -> "{\"parsed\": trunca",
-      "BENCH_r11.json" -> snap(Some(true)))) { dir =>
-      val pick = Bench.pickBaseline(dir).get
-      assert(pick.round === 11)
-      assert(!pick.cleanCertified)
-    }
-  }
-
-  test("snapshotContended reads flag, derives from loads, recovers from tail") {
-    assert(Bench.snapshotContended(snap(Some(true))) === Some(true))
-    assert(Bench.snapshotContended(snap(Some(false))) === Some(false))
-    assert(Bench.snapshotContended(snap(None, Some((3.0, 1.0)))) === Some(true))
-    assert(Bench.snapshotContended(snap(None, Some((0.2, 1.0)))) === Some(false))
-    // tail-only (driver scrape failed): explicit flag wins
-    val tailFlag = """{"parsed":null,"tail":"...\"contended\":true,..."}"""
-    assert(Bench.snapshotContended(tailFlag) === Some(true))
-    // tail-only, pre-flag shape: derive from the loads in the fragment
-    val tailLoads =
-      """{"parsed":null,"tail":"\"load_start\":0.11,\"load_end\":0.9,"}"""
-    assert(Bench.snapshotContended(tailLoads) === Some(false))
-    // nothing recoverable: not certifiable
-    assert(Bench.snapshotContended("""{"parsed":null,"tail":"junk"}""") === None)
-    assert(Bench.snapshotContended("not json at all") === None)
+    assert(debugProps.isEmpty)
   }
 }

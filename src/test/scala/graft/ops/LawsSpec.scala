@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -248,6 +249,54 @@ class LawsSpec extends SparkSpec {
       assert(top4.distinct.length == 4,
         s"$dir: top-3 cut is tied — counts ${top4.mkString(",")}; the " +
         "agg_approx_top_k oracle's in_sketch=TRUE is no longer sound")
+    }
+  }
+
+  /** The textbook EXISTS/NOT EXISTS translation of TPC-H Q21: a left-semi
+    * probe for "another supplier's line on the same order" and a
+    * left-anti probe for "no other supplier's late (R) line", both built
+    * over the whole lineitem table. The reference [[Tpch.waitingOrdersFrom]]'s
+    * single per-order aggregate must reproduce.
+    */
+  private def waitingOrdersSemiAnti(li: DataFrame, ord: DataFrame,
+                                    sup: DataFrame): DataFrame = {
+    val l1 = li.where($"l_returnflag" === "R")
+      .select($"l_orderkey", $"l_suppkey")
+      .join(ord.where($"o_orderstatus" === "F").select($"o_orderkey"),
+            $"l_orderkey" === $"o_orderkey")
+      .join(broadcast(sup), $"l_suppkey" === $"s_suppkey")
+    val others = li.select($"l_orderkey".as("o2k"), $"l_suppkey".as("s2k"))
+    val othersR = li.where($"l_returnflag" === "R")
+      .select($"l_orderkey".as("o3k"), $"l_suppkey".as("s3k"))
+    l1.join(others, $"l_orderkey" === $"o2k" && $"l_suppkey" =!= $"s2k",
+            "left_semi")
+      .join(othersR, $"l_orderkey" === $"o3k" && $"l_suppkey" =!= $"s3k",
+            "left_anti")
+      .groupBy($"s_name")
+      .agg(count(lit(1)).as("numwait"))
+      .orderBy($"numwait".desc, $"s_name")
+      .limit(20)
+  }
+
+  test("q21's per-order aggregate form returns exactly the rows of the " +
+       "EXISTS/NOT EXISTS semi/anti-join form") {
+    for (dir <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")) {
+      val asiaSup = graft.Tables.supplier(spark, dir)
+        .join(broadcast(graft.Tables.nation(spark, dir)
+                .join(graft.Tables.region(spark, dir)
+                        .where($"r_name" === "ASIA"),
+                      $"n_regionkey" === $"r_regionkey")
+                .select($"n_nationkey")),
+              $"s_nationkey" === $"n_nationkey")
+        .select($"s_suppkey", $"s_name")
+      val (li, ord) =
+        (graft.Tables.lineitem(spark, dir), graft.Tables.orders(spark, dir))
+      val agg = Tpch.waitingOrdersFrom(li, ord, asiaSup).collect().toSeq
+      val semiAnti = waitingOrdersSemiAnti(li, ord, asiaSup).collect().toSeq
+      assert(agg.nonEmpty, s"$dir: q21 is empty, the law checks nothing")
+      assert(agg === semiAnti, s"$dir: q21 forms disagree")
+      assert(Tpch.q21WaitingOrders(spark, dir).collect().toSeq === agg,
+        s"$dir: the q21 gate does not run the aggregate form")
     }
   }
 }
